@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from tdei_extract_load_service_spark.operators.staging import staged_build
+from tdei_extract_load_service_spark.operators.staging import file_key, staged_build
 from pyspark.sql import functions as F
 
 from tdei_extract_load_service_spark import oracles as ORACLES
@@ -140,9 +140,6 @@ def _pq_index(spark: SparkSession, sf_dir: str):
         make_codebooks,
     )
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    corpus_key = f"{src}:{st.st_size}:{st.st_mtime_ns}"
     cbs = make_codebooks()
     path, model_rows = build_pq_index(
         spread(_read(spark, sf_dir, "embeddings")),
@@ -150,7 +147,7 @@ def _pq_index(spark: SparkSession, sf_dir: str):
         "embedding",
         cbs,
         num_centroids=16,
-        corpus_key=corpus_key,
+        corpus_key=file_key(os.path.join(sf_dir, "embeddings.parquet")),
     )
     return path, model_rows, cbs
 
@@ -362,7 +359,6 @@ def q_embedding_drift_alert_stored(spark: SparkSession, sf_dir: str) -> DataFram
 
     emb = spread(_read(spark, sf_dir, "embeddings"))
     src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
     path = build_drift_history_index(
         emb,
         "vec_id",
@@ -370,7 +366,7 @@ def q_embedding_drift_alert_stored(spark: SparkSession, sf_dir: str) -> DataFram
         snapshot_of=lambda c: c % 4,
         num_centroids=16,
         dim=64,
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}:drift4",
+        corpus_key=file_key(src, "drift4"),
         snapshot_key="vec_id%4",
     )
     return drift_alerts_stored(
@@ -434,14 +430,13 @@ def q_similarity_ivf_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFra
     delta_cond = (F.col("vec_id") % 4 == 0) & (F.col("vec_id") >= 100)
     base, delta = emb.where(~delta_cond), emb.where(delta_cond)
     src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
     cbs = make_codebooks()
     base_path, model_rows = build_pq_index(
         base,
         "vec_id",
         "embedding",
         cbs,
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}:incr_base",
+        corpus_key=file_key(src, "incr_base"),
     )
     merged = f"{base_path}_incr_merged"
     if not os.path.exists(os.path.join(merged, "_DELTA_APPENDED")):

@@ -26,6 +26,7 @@ from tdei_extract_load_service_spark.operators import relational as R
 from tdei_extract_load_service_spark.operators.query_builder import (
     DynamicQueryBuilder,
 )
+from tdei_extract_load_service_spark.operators.staging import file_key
 from tdei_extract_load_service_spark.session import sort_boundary, spread
 
 
@@ -287,7 +288,6 @@ def q_dedup_embedding_lsh_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tdei_extract_load_service_spark.operators.similarity import make_planes
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
     path = build_embedding_lsh_index(
         _read(spark, sf_dir, "embeddings"),
         "vec_id",
@@ -296,7 +296,7 @@ def q_dedup_embedding_lsh_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_bands=4,
         planes_per_band=4,
         planes=make_planes(16, 64),
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}",
+        corpus_key=file_key(src),
     )
     return embedding_lsh_pairs_stored(spark, path, threshold=0.45)
 
@@ -321,7 +321,6 @@ def q_embedding_lsh_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tdei_extract_load_service_spark.operators.similarity import make_planes
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
     path = build_embedding_lsh_index(
         _read(spark, sf_dir, "embeddings"),
         "vec_id",
@@ -330,7 +329,7 @@ def q_embedding_lsh_probe_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_bands=4,
         planes_per_band=4,
         planes=make_planes(16, 64),
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}",
+        corpus_key=file_key(src),
     )
     return embedding_lsh_probe_stored(
         spark, path, _query_vec(spark, sf_dir), threshold=-1.0, k=10
@@ -361,7 +360,6 @@ def q_embedding_lsh_probe_multiband(
     from tdei_extract_load_service_spark.operators.similarity import make_planes
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
     path = build_embedding_lsh_index(
         _read(spark, sf_dir, "embeddings"),
         "vec_id",
@@ -370,7 +368,7 @@ def q_embedding_lsh_probe_multiband(
         n_bands=4,
         planes_per_band=4,
         planes=make_planes(16, 64),
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}",
+        corpus_key=file_key(src),
         replicate_bands=True,
     )
     return embedding_lsh_probe_multiband(
@@ -421,12 +419,11 @@ def q_dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     delta_cond = F.col("doc_id") % 4 == 0
     src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
     path = build_fingerprint_index(
         docs.where(~delta_cond),
         "doc_id",
         ["text_head"],
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}:bloom_base",
+        corpus_key=file_key(src, "bloom_base"),
     )
     out = bloom_prefilter_members(
         spark, path, docs.where(delta_cond), "doc_id", ["text_head"]
@@ -461,12 +458,11 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents")
     delta_cond = F.col("doc_id") % 4 == 0
     src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
     path = build_fingerprint_index(
         docs.where(~delta_cond),
         "doc_id",
         ["text"],
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}:incr_base",
+        corpus_key=file_key(src, "incr_base"),
     )
     return dedup_incremental(
         spark, path, docs.where(delta_cond), "doc_id", ["text"]
@@ -502,7 +498,6 @@ def q_dedup_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = _read(spark, sf_dir, "embeddings")
     delta_cond = F.col("vec_id") % 4 == 0
     src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
     path = build_embedding_lsh_index(
         emb.where(~delta_cond),
         "vec_id",
@@ -511,7 +506,7 @@ def q_dedup_embedding_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         n_bands=4,
         planes_per_band=4,
         planes=make_planes(16, 64),
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}:incr_base",
+        corpus_key=file_key(src, "incr_base"),
     )
     return dedup_embedding_incremental(
         spark, path, emb.where(delta_cond), "vec_id", "embedding", threshold=0.45

@@ -26,6 +26,7 @@ from tdei_extract_load_service_spark.operators import relational as R
 from tdei_extract_load_service_spark.operators.query_builder import (
     DynamicQueryBuilder,
 )
+from tdei_extract_load_service_spark.operators.staging import file_key
 from tdei_extract_load_service_spark.session import sort_boundary, spread
 
 
@@ -407,10 +408,9 @@ def q_distinct_rollup_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _read_events(spark, sf_dir)
     bucket = F.expr("unix_micros(ts) DIV 86400000000")
     src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
     path = build_distinct_sketch_partials(
         ev, bucket, "user_id",
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}:user_daily",
+        corpus_key=file_key(src, "user_daily"),
     )
     lo, hi = ev.agg(F.min(bucket), F.max(bucket)).first()
     out = (
@@ -1082,9 +1082,8 @@ def q_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = _os.path.join(sf_dir, "orders.parquet")
-    st = _os.stat(src)
     digest = _hashlib.md5(
-        f"ttv1:{src}:{st.st_size}:{st.st_mtime_ns}".encode()
+        ("ttv1:" + file_key(src)).encode()
     ).hexdigest()[:24]
     root = _os.path.join("/tmp/spark_graft_timetravel", digest)
     cols = ("o_orderkey", "o_custkey", "o_orderstatus")
@@ -1192,9 +1191,8 @@ def q_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     src = _os.path.join(sf_dir, "orders.parquet")
-    st = _os.stat(src)
     digest = _hashlib.md5(
-        f"tcf1:{src}:{st.st_size}:{st.st_mtime_ns}".encode()
+        ("tcf1:" + file_key(src)).encode()
     ).hexdigest()[:24]
     root = _os.path.join("/tmp/spark_graft_tablechanges", digest)
     cols = ("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")

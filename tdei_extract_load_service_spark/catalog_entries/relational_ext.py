@@ -26,6 +26,7 @@ from tdei_extract_load_service_spark.operators import relational as R
 from tdei_extract_load_service_spark.operators.query_builder import (
     DynamicQueryBuilder,
 )
+from tdei_extract_load_service_spark.operators.staging import file_key
 from tdei_extract_load_service_spark.session import sort_boundary, spread
 
 
@@ -766,21 +767,22 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     strategy the layout exists for: at 100 TB both sides are fact-sized
     and broadcast is impossible — at audit scale the planner would
     otherwise broadcast and hide the layout. The oracle is the PLAIN
-    join: bucketing must not change results, only the plan."""
+    join: bucketing must not change results, only the plan. Each table
+    is keyed on its own input file, so rewriting either one rebuilds
+    that side's layout."""
     import os
 
     from tdei_extract_load_service_spark.operators.bucketed import (
         bucketed_table,
     )
 
-    key = f"{sf_dir}:{os.path.getmtime(os.path.join(sf_dir, 'orders.parquet'))}"
     cust = bucketed_table(
         spark,
         _read(spark, sf_dir, "customer").select("c_custkey", "c_name"),
         "customer",
         ["c_custkey"],
         8,
-        key,
+        file_key(os.path.join(sf_dir, "customer.parquet")),
     )
     orders = bucketed_table(
         spark,
@@ -788,7 +790,7 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "orders",
         ["o_custkey"],
         8,
-        key,
+        file_key(os.path.join(sf_dir, "orders.parquet")),
     )
     return (
         cust.hint("merge")
@@ -1425,13 +1427,12 @@ def q_zorder_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         dir_shift=4,
     )
     src = _os.path.join(sf_dir, "orders.parquet")
-    st = _os.stat(src)
     path = build_zorder_layout(
         _read(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         ),
         spec,
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}",
+        corpus_key=file_key(src),
     )
     return zorder_range_scan(
         spark, path, spec, 256, 1023, 50000, 150000

@@ -26,6 +26,7 @@ from tdei_extract_load_service_spark.operators import relational as R
 from tdei_extract_load_service_spark.operators.query_builder import (
     DynamicQueryBuilder,
 )
+from tdei_extract_load_service_spark.operators.staging import file_key
 from tdei_extract_load_service_spark.session import spread
 
 
@@ -386,11 +387,10 @@ def q_text_bm25_topk_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tdei_extract_load_service_spark.operators import text as TX
 
     src = _os.path.join(sf_dir, "documents.parquet")
-    st = _os.stat(src)
     docs = spread(_read(spark, sf_dir, "documents"))
     path, n_docs, avgdl = TX.build_bm25_index(
         docs, "doc_id", "text",
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}",
+        corpus_key=file_key(src),
     )
     return TX.bm25_topk_stored(
         spark, path, n_docs, avgdl,

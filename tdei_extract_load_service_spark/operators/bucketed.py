@@ -37,7 +37,7 @@ def bucketed_table(
     base_name: str,
     bucket_cols: Sequence[str],
     n_buckets: int,
-    corpus_key: str | None = None,
+    corpus_key: str,
 ) -> DataFrame:
     """Materialize ``df`` as a bucketed external parquet table and
     return it as a catalog-backed DataFrame whose scan carries the
@@ -54,11 +54,11 @@ def bucketed_table(
     task partitioning with the bucket hash (both are Murmur3 on the
     columns), so each bucket lands in ONE file — the layout that also
     permits sorted-scan reads. ``corpus_key`` must change when the
-    source data does (callers pass path + mtime).
+    source data does (``staging.file_key`` of the table's input).
     """
     cols = list(bucket_cols)
     digest = hashlib.md5(
-        repr((base_name, cols, n_buckets, corpus_key or "anon")).encode()
+        repr((base_name, cols, n_buckets, corpus_key)).encode()
     ).hexdigest()[:20]
     name = f"bkt_{base_name}_{digest}"
     if spark.catalog.tableExists(name):

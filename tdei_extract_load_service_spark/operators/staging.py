@@ -1,12 +1,21 @@
-"""Write-once staged publication for content-addressed local layouts.
+"""Write-once stored indexes for content-addressed local layouts.
 
-Every stored layout in the repo (z-order, PQ index, BM25 postings,
-bucketed tables, the streaming stage, the incremental-PQ merge) follows
-the same discipline: build under ``{path}.build.{pid}``, then publish
-with ONE atomic ``os.rename`` — concurrent builders produce identical
-bytes by construction, so the loser just drops its copy. This module
-centralizes the two failure-path obligations those sites used to handle
-inconsistently (ADVICE r9 + VERDICT r9 #8):
+Every stored index in the repo (z-order layout, fingerprint index,
+banded LSH, HLL rollup, BM25 postings, PQ codes, drift history) goes
+through ``stored_index(root, key, build, marker)``: the snapshot lives
+at ``{root}/{md5(repr(key))[:24]}``, a snapshot whose ``marker`` file
+exists is served as is (``touch_snapshot`` bumps its recency), and a
+missing one is built by ``build(tmp)`` and published. The on-disk
+snapshot is the only cache, so the key must name everything the bytes
+depend on. Input files enter the key through ``file_key(path, *tags)``
+(path, size and mtime), so a rewritten input addresses a new snapshot
+instead of serving the stale one.
+
+Publication is ``staged_build``: build under ``{path}.build.{pid}``,
+then publish with ONE atomic ``os.rename`` — concurrent builders
+produce identical bytes by construction, so the loser just drops its
+copy. It carries the two failure-path obligations (ADVICE r9 + VERDICT
+r9 #8):
 
 1. **No orphans**: if the build itself dies (executor OOM mid-write,
    ctrl-C), the ``*.build.{pid}`` dir is reaped in ``finally`` instead
@@ -14,7 +23,10 @@ inconsistently (ADVICE r9 + VERDICT r9 #8):
 2. **No phantom publishes**: if the rename fails for a reason OTHER
    than "a concurrent winner already published" (cross-device tmp,
    permissions), the error is re-raised instead of swallowed, so
-   callers never cache a path that does not exist.
+   callers never serve a path that does not exist.
+
+Each publish then runs ``sweep_index_root`` on the root, which bounds
+the snapshots a root retains.
 
 At cluster scale the same shape maps onto a distributed FS rename (or a
 manifest pointer swap, ``sinks/manifest.py``); the obligations are
@@ -23,10 +35,11 @@ identical.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 from contextlib import contextmanager
-from typing import Iterator
+from typing import Callable, Iterator
 
 
 @contextmanager
@@ -40,7 +53,7 @@ def staged_build(final_path: str, marker: str | None = "_SUCCESS") -> Iterator[s
     After a failed rename the marker is checked: present means a
     concurrent builder won (fine — identical bytes); absent means the
     rename itself failed, and the OSError propagates rather than
-    leaving callers to cache a phantom path.
+    leaving callers to serve a phantom path.
 
     The build dir is removed on EVERY exit path — success (it was
     renamed away; rmtree is a no-op), concurrent loss, or a build
@@ -83,8 +96,8 @@ def touch_snapshot(path: str) -> str:
     sweep tombstoned it while it sat cold, RESURRECT it (snapshots are
     content-addressed and immutable, so un-tombstoning is always
     correct — the bytes a rebuild would produce are the bytes already
-    there). The stored-index builders call this on every cache/exists
-    hit, so retention ranks by last USE, not last build."""
+    there). ``stored_index`` calls this on every hit, so retention
+    ranks by last USE, not last build."""
     tomb = os.path.join(path, _TOMBSTONE)
     if os.path.exists(tomb):
         try:
@@ -116,13 +129,13 @@ def sweep_index_root(
     rename, never lose the PATH a long-lived plan re-opens:
 
     1. complete snapshots beyond the ``keep_latest`` most recently
-       USED (``touch_snapshot`` bumps recency on every builder cache
-       hit) get a ``_TOMBSTONE`` file dropped INSIDE them — purely
+       USED (``touch_snapshot`` bumps recency on every
+       ``stored_index`` hit) get a ``_TOMBSTONE`` file dropped INSIDE them — purely
        logical, the directory keeps serving; a later touch resurrects
        it (content-addressed dirs are immutable, so un-tombstoning is
        free and always correct);
     2. tombstones older than ``grace_sec`` are physically reaped by a
-       LATER sweep (the next build's wired-in call, or an explicit
+       LATER sweep (the next ``stored_index`` build, or an explicit
        maintenance invocation — exactly how a displaced manifest dir
        is reaped by the next commit).
 
@@ -194,3 +207,30 @@ def sweep_index_root(
         os.utime(tomb, (now, now))
         result["tombstoned"].append(name)
     return result
+
+
+def file_key(path: str, *tags) -> str:
+    """Identity of one input file for a stored-index key:
+    ``{path}:{size}:{mtime_ns}``, then ``:{tag}`` for each tag (the
+    build variant over the same file, e.g. a base split)."""
+    st = os.stat(path)
+    return ":".join([path, str(st.st_size), str(st.st_mtime_ns), *map(str, tags)])
+
+
+def stored_index(
+    root: str, key, build: Callable[[str], None], marker: str
+) -> str:
+    """Path of the snapshot for ``key`` under ``root``, built on a miss.
+
+    A snapshot whose ``marker`` file exists is served after
+    ``touch_snapshot``, with no Spark work. Otherwise ``build(tmp)``
+    writes the layout to the not-yet-existing dir ``tmp`` (``marker``
+    included), ``staged_build`` publishes it atomically, and the root
+    is swept."""
+    path = os.path.join(root, hashlib.md5(repr(key).encode()).hexdigest()[:24])
+    if os.path.exists(os.path.join(path, marker)):
+        return touch_snapshot(path)
+    with staged_build(path, marker=marker) as tmp:
+        build(tmp)
+    sweep_index_root(root, keep_latest=8)
+    return path

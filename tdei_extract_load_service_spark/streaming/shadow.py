@@ -25,7 +25,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from tdei_extract_load_service_spark.operators.staging import staged_build
+from tdei_extract_load_service_spark.operators.staging import file_key, staged_build
 from pyspark.sql import functions as F
 
 _QUERY_COUNTER = itertools.count()
@@ -71,10 +71,7 @@ def _stage_parquet_batches(
     import shutil
 
     st = os.stat(src)
-    key = (
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:{n_batches}"
-        f"{key_suffix}:{split_expr}"
-    )
+    key = file_key(src, n_batches) + f"{key_suffix}:{split_expr}"
     hit = _STAGE_CACHE.get(key)
     if hit is not None:
         return hit

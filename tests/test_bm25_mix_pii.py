@@ -8,6 +8,9 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_SMOKE
+from tdei_extract_load_service_spark.operators.staging import file_key
+
 
 class TestBM25:
     def _docs(self, spark, rows):
@@ -285,10 +288,8 @@ class TestBM25Stored:
         docs = spark.read.parquet(os.path.join(sf, "documents.parquet"))
         terms = ["spark", "join", "window", "scan"]
         src = os.path.join(sf, "documents.parquet")
-        st = os.stat(src)
         path, n_docs, avgdl = build_bm25_index(
-            docs, "doc_id", "text",
-            corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}",
+            docs, "doc_id", "text", corpus_key=file_key(src)
         )
         inline = [tuple(r) for r in bm25_topk(docs, "doc_id", "text", terms).collect()]
         stored = [
@@ -312,10 +313,8 @@ class TestBM25Stored:
         sf = "/root/testdata/sf0.001"
         docs = spark.read.parquet(os.path.join(sf, "documents.parquet"))
         src = os.path.join(sf, "documents.parquet")
-        st = os.stat(src)
         path, n_docs, avgdl = build_bm25_index(
-            docs, "doc_id", "text",
-            corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}",
+            docs, "doc_id", "text", corpus_key=file_key(src)
         )
         df = bm25_topk_stored(spark, path, n_docs, avgdl, ["spark"])
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -330,9 +329,36 @@ class TestBM25Stored:
 
         sf = "/root/testdata/sf0.001"
         docs = spark.read.parquet(os.path.join(sf, "documents.parquet"))
-        src = os.path.join(sf, "documents.parquet")
-        st = os.stat(src)
-        key = f"{src}:{st.st_size}:{st.st_mtime_ns}"
+        key = file_key(os.path.join(sf, "documents.parquet"))
         a = build_bm25_index(docs, "doc_id", "text", corpus_key=key)
         b = build_bm25_index(docs, "doc_id", "text", corpus_key=key)
         assert a == b and os.path.exists(os.path.join(a[0], "_meta.json"))
+
+    def test_rewritten_input_rebuilds_index(self, spark, tmp_path):
+        """The stored index is keyed by what the input is: rewriting the
+        corpus file addresses a new snapshot instead of serving the
+        stale one."""
+        import os
+        import shutil
+
+        import pyarrow.parquet as pq
+
+        from tdei_extract_load_service_spark.operators.text import (
+            build_bm25_index,
+        )
+
+        src = str(tmp_path / "documents.parquet")
+        shutil.copy(os.path.join(SF_SMOKE, "documents.parquet"), src)
+
+        def build():
+            docs = spark.read.parquet(src)
+            return build_bm25_index(
+                docs, "doc_id", "text", corpus_key=file_key(src)
+            )
+
+        path, n_docs, _ = build()
+        table = pq.read_table(src)
+        pq.write_table(table.slice(0, table.num_rows // 2), src)
+        path2, n_docs2, _ = build()
+        assert path2 != path
+        assert n_docs2 == table.num_rows // 2 != n_docs

@@ -7,6 +7,8 @@ import shutil
 import pandas as pd
 import pytest
 
+from tests.conftest import SF_SMOKE
+
 
 @pytest.fixture()
 def frames(spark, tmp_path):
@@ -72,3 +74,25 @@ def test_reregistration_from_existing_layout(spark, frames, request):
     assert sorted(r["k"] for r in bd2.collect()) == sorted(
         r["k"] for r in bd1.collect()
     )
+
+
+def test_join_bucketed_follows_rewritten_customer(spark, tmp_path):
+    """Each bucketed side is keyed on its own input file: rewriting only
+    customer.parquet must rebuild the customer layout, not serve the
+    one built from the old file."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tdei_extract_load_service_spark.catalog_entries.relational_ext import (
+        q_join_bucketed,
+    )
+
+    for t in ("customer", "orders"):
+        shutil.copy(f"{SF_SMOKE}/{t}.parquet", tmp_path / f"{t}.parquet")
+    before = q_join_bucketed(spark, str(tmp_path)).collect()
+    cust = pq.read_table(tmp_path / "customer.parquet")
+    even = pc.equal(pc.bit_wise_and(cust["c_custkey"], 1), 0)
+    pq.write_table(cust.filter(even), tmp_path / "customer.parquet")
+    after = q_join_bucketed(spark, str(tmp_path)).collect()
+    assert after == [r for r in before if r.c_custkey % 2 == 0]
+    assert len(after) < len(before)

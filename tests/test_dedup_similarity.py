@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 from tdei_extract_load_service_spark.operators import dedup as D
 from tdei_extract_load_service_spark.operators import similarity as S
+from tdei_extract_load_service_spark.operators.staging import file_key
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog"),
@@ -465,12 +466,11 @@ def _emb_lsh_index(spark, tag=""):
     import os
 
     src = os.path.join(SF_SMOKE, "embeddings.parquet")
-    st = os.stat(src)
     emb = spark.read.parquet(src)
     return D.build_embedding_lsh_index(
         emb, "vec_id", "embedding", dim=64, n_bands=4, planes_per_band=4,
         planes=S.make_planes(16, 64),
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}:pytest{tag}",
+        corpus_key=file_key(src, f"pytest{tag}"),
     )
 
 
@@ -629,11 +629,10 @@ def test_dedup_embedding_incremental_equals_full_restricted(spark):
     emb = spark.read.parquet(sf + "/embeddings.parquet")
     delta_cond = F.col("vec_id") % 4 == 0
     src = os.path.join(sf, "embeddings.parquet")
-    st = os.stat(src)
     path = D.build_embedding_lsh_index(
         emb.where(~delta_cond), "vec_id", "embedding", dim=64,
         n_bands=4, planes_per_band=4, planes=S.make_planes(16, 64),
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}:incr_base",
+        corpus_key=file_key(src, "incr_base"),
     )
     got = {
         (r.id_a, r.id_b): r.cosine
@@ -711,12 +710,11 @@ def _multiband_index(spark, tag=""):
     import os
 
     src = os.path.join(SF_SMOKE, "embeddings.parquet")
-    st = os.stat(src)
     emb = spark.read.parquet(src)
     return D.build_embedding_lsh_index(
         emb, "vec_id", "embedding", dim=64, n_bands=4, planes_per_band=4,
         planes=S.make_planes(16, 64),
-        corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}:pytest-mb{tag}",
+        corpus_key=file_key(src, f"pytest-mb{tag}"),
         replicate_bands=True,
     )
 

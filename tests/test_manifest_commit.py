@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from tdei_extract_load_service_spark.plans.load_dataset import load_dataset, read_sink
 from tdei_extract_load_service_spark.sinks import manifest as mf
+from tdei_extract_load_service_spark.operators.staging import file_key
 
 
 def _df(spark, rows, schema="id: long, v: string"):
@@ -615,10 +616,7 @@ def test_time_travel_entry_recovers_from_partial_history(spark):
 
     # the entry's content-addressed root (same derivation it uses)
     src = os.path.join(sf, "orders.parquet")
-    st = os.stat(src)
-    digest = hashlib.md5(
-        f"ttv1:{src}:{st.st_size}:{st.st_mtime_ns}".encode()
-    ).hexdigest()[:24]
+    digest = hashlib.md5(("ttv1:" + file_key(src)).encode()).hexdigest()[:24]
     root = os.path.join("/tmp/spark_graft_timetravel", digest)
     assert mf.list_versions(root) == [1, 2]
 

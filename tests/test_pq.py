@@ -8,6 +8,7 @@ import random
 import pandas as pd
 import pytest
 
+from tests.conftest import SF_SMOKE
 from tdei_extract_load_service_spark.operators.similarity import (
     make_codebooks,
     pq_adc_lut,
@@ -223,6 +224,36 @@ def test_stored_index_serving_matches_inline(spark, tmp_path):
     )
     assert path2 == path
     assert probe_centroids(model_rows, query, 3)  # model rows round-trip
+
+
+def test_stored_index_repeat_build_runs_no_job(spark, tmp_path):
+    """The centroid model is stored with the codes, so building an
+    index that is already on disk runs no Spark job, and the model it
+    returns equals the one the build collected."""
+    from tdei_extract_load_service_spark.operators.similarity import (
+        build_pq_index,
+        ivf_centroids,
+    )
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    cbs = make_codebooks()
+    tracker = spark.sparkContext.statusTracker()
+
+    def build():
+        before = set(tracker.getJobIdsForGroup(None))
+        out = build_pq_index(
+            emb, "vec_id", "embedding", cbs, num_centroids=8,
+            corpus_key=f"repeat:{tmp_path}",
+        )
+        return out, set(tracker.getJobIdsForGroup(None)) - before
+
+    (path, rows), first_jobs = build()
+    (path2, rows2), repeat_jobs = build()
+    assert first_jobs  # the tracker sees this thread's jobs
+    assert repeat_jobs == set()
+    assert path2 == path
+    expected = ivf_centroids(emb, "vec_id", "embedding", 8).collect()
+    assert rows == expected and rows2 == expected
 
 
 def test_trained_entry_uplift_pinned_at_sf001(spark):

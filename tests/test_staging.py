@@ -10,7 +10,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from tdei_extract_load_service_spark.operators.staging import staged_build
+from tdei_extract_load_service_spark.operators.staging import (
+    file_key,
+    staged_build,
+    stored_index,
+)
 
 
 def _no_orphans(root: str) -> bool:
@@ -74,6 +78,32 @@ def test_marker_none_accepts_any_existing_dir(tmp_path):
         os.makedirs(build)
     assert os.path.exists(os.path.join(final, "000.parquet"))
     assert _no_orphans(str(tmp_path))
+
+
+def test_file_key_format(tmp_path):
+    # existing snapshots are addressed by digests of this exact string
+    src = tmp_path / "t.parquet"
+    src.write_bytes(b"abc")
+    st = os.stat(src)
+    assert file_key(str(src)) == f"{src}:3:{st.st_mtime_ns}"
+    assert file_key(str(src), "base", 4) == f"{src}:3:{st.st_mtime_ns}:base:4"
+
+
+def test_stored_index_builds_once_per_key(tmp_path):
+    root = str(tmp_path / "idx")
+    calls = []
+
+    def build(tmp):
+        calls.append(tmp)
+        os.makedirs(tmp)
+        open(os.path.join(tmp, "_meta.json"), "w").close()
+
+    a = stored_index(root, ("k", 1), build, "_meta.json")
+    assert stored_index(root, ("k", 1), build, "_meta.json") == a
+    b = stored_index(root, ("k", 2), build, "_meta.json")
+    assert len(calls) == 2 and b != a
+    assert os.path.exists(os.path.join(a, "_meta.json"))
+    assert _no_orphans(root)
 
 
 def test_salted_agg_salt_stable_under_repartition(spark):

@@ -712,14 +712,14 @@ def main() -> int:
             embedding_lsh_pairs_stored,
         )
         from tdei_extract_load_service_spark.operators.similarity import make_planes
+        from tdei_extract_load_service_spark.operators.staging import file_key
 
         src = os.path.join(sf_dir, "embeddings.parquet")
-        st = os.stat(src)
         path = build_embedding_lsh_index(
             _read(spark, sf_dir, "embeddings"), "vec_id", "embedding",
             dim=64, n_bands=4, planes_per_band=4,
             planes=make_planes(16, 64),
-            corpus_key=f"{src}:{st.st_size}:{st.st_mtime_ns}",
+            corpus_key=file_key(src),
         )
         return embedding_lsh_pairs_stored(spark, path, threshold=0.45, eager=False)
 
